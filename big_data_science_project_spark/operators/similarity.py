@@ -1620,20 +1620,19 @@ def _cell_check(new: DataFrame, idx: DataFrame) -> DataFrame:
             # cosine is bit-identical. Peak temporaries drop D-fold
             # (two chunk x M planes, ~8 MB at the 1<<25 sizing, vs two
             # ~256 MB cubes — first-touch page cost at any corpus size)
-            buf = None
+            acc = np.empty((min(step, b), m), dtype=np.result_type(nm, im))
+            buf = np.empty_like(acc)
             for s in range(0, b, step):
                 e = min(b, s + step)
-                acc = nm[s:e, None, 0] * im[None, :, 0]
-                if buf is None or buf.shape[0] < e - s:
-                    buf = np.empty_like(acc)
-                bv = buf[:e - s]
+                av, bv = acc[:e - s], buf[:e - s]
+                np.multiply(nm[s:e, None, 0], im[None, :, 0], out=av)
                 for d in range(1, DIM):
                     np.multiply(nm[s:e, None, d], im[None, :, d], out=bv)
-                    acc += bv
+                    av += bv
                 # one divide by the norm PRODUCT, exactly as before —
                 # dividing by nn then inrm would round differently
-                acc /= nn[s:e, None] * inrm[None, :]
-                best[s:e] = acc.max(axis=1)
+                av /= nn[s:e, None] * inrm[None, :]
+                best[s:e] = av.max(axis=1)
             out["best_cos"] = best
         return pd.DataFrame(out)
 

@@ -6,6 +6,8 @@ shuffle/compute-heavy queries over a 10x key-shifted replica
 (tools/scale_probe.build_scaled — the same content-perturbed replica
 the superlinearity probe uses) at local[8] and local[32] and records
 the speedup, committed as CORE_SCALING.json next to STRAGGLER.json.
+``--cores`` takes any number of counts: the artifact holds every
+count's timings and each higher count's speedup over the lowest.
 
 Each (cores, query) cell is min-of-N wall of the bench's own
 checksum_count action, measured in a FRESH subprocess/session per core
@@ -107,23 +109,27 @@ def main() -> None:
             raise SystemExit(f"runner at {cores} cores failed")
         results[str(cores)] = json.loads(line[0].split(" ", 1)[1])
 
-    cores_lo, cores_hi = sorted(int(c) for c in results)
+    counts = sorted(int(c) for c in results)
     per_query = {}
     for name in QUERIES:
-        lo = results[str(cores_lo)][name]
-        hi = results[str(cores_hi)][name]
-        if lo["checksum"] != hi["checksum"] or lo["rows"] != hi["rows"]:
-            raise SystemExit(
-                f"{name}: result differs across core counts — "
-                f"{lo} vs {hi}")
-        per_query[name] = {
-            f"sec_{cores_lo}c": lo["sec"], f"sec_{cores_hi}c": hi["sec"],
-            "speedup": round(lo["sec"] / hi["sec"], 2),
-            "rows": lo["rows"],
-        }
+        cells = [results[str(c)][name] for c in counts]
+        base = cells[0]
+        for c, cell in zip(counts[1:], cells[1:]):
+            if (cell["checksum"], cell["rows"]) != (base["checksum"],
+                                                    base["rows"]):
+                raise SystemExit(
+                    f"{name}: result differs across core counts — "
+                    f"{base} at {counts[0]} vs {cell} at {c}")
+        entry = {"rows": base["rows"]}
+        for c, cell in zip(counts, cells):
+            entry[f"sec_{c}c"] = cell["sec"]
+        # speedup of every higher count over the lowest
+        for c, cell in zip(counts[1:], cells[1:]):
+            entry[f"speedup_{c}c"] = round(base["sec"] / cell["sec"], 2)
+        per_query[name] = entry
     artifact = {
         "replica_rep": args.rep, "src": SRC,
-        "cores": [cores_lo, cores_hi],
+        "cores": counts,
         "reps_per_query": args.reps_per_query,
         "max_partition_bytes": "16m",
         "per_query": per_query,
